@@ -25,6 +25,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -976,10 +977,31 @@ def ivf_index_delta(
     return assigned
 
 
+def _partition_keys(spark, n: int) -> list[int]:
+    """Keys ``k_0 .. k_{n-1}`` that ``repartition(n, key)`` sends to
+    tasks ``0 .. n-1``: hash partitioning puts a row in task
+    ``pmod(hash(key), n)``, so tagging slice ``i`` with ``k_i`` gives
+    every slice a task of its own, free of hash collisions. Found by
+    one small scan of candidate integers (the smallest candidate per
+    task, so the mapping is deterministic)."""
+    found: dict[int, int] = {}
+    lo = 0
+    while len(found) < n:
+        hi = lo + 64 * n
+        for r in (
+            spark.range(lo, hi)
+            .groupBy(F.pmod(F.hash("id"), F.lit(n)).alias("p"))
+            .agg(F.min("id").alias("k"))
+            .collect()
+        ):
+            found.setdefault(r.p, r.k)
+        lo = hi
+    return [found[p] for p in range(n)]
+
+
 def compact_ivf_index(
     spark,
     path: str,
-    n_tasks: int | None = None,
     files_per_cell: int = 1,
     replace_latest_by: str | None = None,
 ) -> int:
@@ -1016,11 +1038,12 @@ def compact_ivf_index(
     still compete per id with higher seqs. Requires the store to
     carry ``ingest_seq`` (any index written by the r12+ writers).
 
-    Layout discipline: the rewrite is ``repartition(n, "cell",
-    salt)`` with a per-row salt in [0, files_per_cell) — every
-    (cell, salt) slice lands wholly in one task, so each cell
-    directory gets exactly ``files_per_cell`` files regardless of how
-    many ingests it had. The default 1 is right while cells fit one
+    Layout discipline: each row gets a salt in [0, files_per_cell),
+    and every (cell, salt) slice is written by its OWN task — one
+    task per slice, mapped exactly (see _partition_keys), not by hash
+    luck — so each cell directory gets exactly ``files_per_cell``
+    files regardless of how many ingests it had or how many cores run
+    the job. The default 1 is right while cells fit one
     task; at corpus scale set ``files_per_cell ≈ ceil(rows_per_cell /
     target_file_rows)`` so probing one cell still fans out across
     executors instead of reading one giant file serially. The swap
@@ -1051,9 +1074,9 @@ def compact_ivf_index(
     # the all-footers schema merge is the right place to pay for exact
     # migration (the probe hot path deliberately keeps the cheap read)
     df = spark.read.option("mergeSchema", "true").parquet(path)
-    n = n_tasks or max(1, spark.sparkContext.defaultParallelism)
     if files_per_cell < 1:
         raise ValueError(f"files_per_cell must be >= 1; got {files_per_cell}")
+    cells = sorted(r.cell for r in df.select("cell").distinct().collect())
     if replace_latest_by is not None:
         if "ingest_seq" not in df.columns:
             raise ValueError(
@@ -1122,13 +1145,30 @@ def compact_ivf_index(
         # pure-legacy store: no version order recorded anywhere — keep
         # every ingest partition, merge files only
         new_ingest = F.col("ingest")
+    # one write task per (cell, salt) slice: slice i carries the key
+    # that hash partitioning sends to task i
+    slices = [(c, s) for c in cells for s in range(files_per_cell)]
+    slice_keys = spark.createDataFrame(
+        [
+            (*sl, k)
+            for sl, k in zip(slices, _partition_keys(spark, len(slices)))
+        ],
+        StructType(
+            [
+                df.schema["cell"],
+                StructField("_salt", LongType()),
+                StructField("_key", LongType()),
+            ]
+        ),
+    )
     out = (
         df.withColumn("_ing", new_ingest)
         .drop("ingest")
         .withColumnRenamed("_ing", "ingest")
         .withColumn("_salt", salt)
-        .repartition(n, "cell", "_salt")
-        .drop("_salt")
+        .join(F.broadcast(slice_keys), ["cell", "_salt"])
+        .repartition(len(slices), "_key")
+        .drop("_salt", "_key")
     )
     staging = path.rstrip("/") + "__compacting"
     out.write.mode("overwrite").partitionBy("cell", "ingest").parquet(

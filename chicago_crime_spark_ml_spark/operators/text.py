@@ -458,14 +458,26 @@ def lexical_index_delta(
     MULTI-VERSION when the caller appends the fresh rows. The
     streaming sink writes them to the store's ``_mv`` manifest so the
     latest-wins readers never need an aggregate over the store; the
-    set falls out of the dup-detection joins above at no extra
-    cost."""
-    d_post, d_len = lexical_index(new_docs, text_col, id_col)
-    d_post = d_post.localCheckpoint(eager=True)
-    d_len = d_len.localCheckpoint(eager=True)
-    delta_ids = d_len.select(id_col)
+    set is the verdict's changed rows, at no extra cost.
+
+    Two materialization points, each evaluated once: the delta's
+    postings (the batch is tokenized ONCE; its doclen is Σ tf per doc
+    over them, equal to the token count because both count the same
+    exploded tokens) and the delta-sized re-send VERDICT (dup id →
+    changed or not), which holds the only reads of ``postings`` and
+    ``doclen``. All returned frames are lazy over those two, so a
+    caller may write to the stores it read from without the returned
+    frames ever reading them again."""
+    d_post = lexical_index(new_docs, text_col, id_col)[0].localCheckpoint(
+        eager=True
+    )
+    # coalesce keeps dl non-nullable, as lexical_index's count is, so
+    # the stored doclen schema does not change
+    d_len = d_post.groupBy(id_col).agg(
+        F.coalesce(F.sum("tf"), F.lit(0)).alias("dl")
+    )
     dup_ids = doclen.select(id_col).join(
-        F.broadcast(delta_ids), id_col, "left_semi"
+        F.broadcast(d_len.select(id_col)), id_col, "left_semi"
     ).distinct()
     dup_stored_post = postings.join(F.broadcast(dup_ids), id_col, "left_semi")
     dup_stored_len = doclen.join(F.broadcast(dup_ids), id_col, "left_semi")
@@ -479,12 +491,21 @@ def lexical_index_delta(
         .join(dup_stored_post, [id_col, "term", "tf"], "left_anti")
         .select(id_col)
     )
-    changed_ids = changed_by_len.unionByName(changed_by_post).distinct()
-    unchanged_dups = dup_ids.join(changed_ids, id_col, "left_anti")
+    changed_ids = (
+        changed_by_len.unionByName(changed_by_post)
+        .distinct()
+        .withColumn("changed", F.lit(True))
+    )
+    verdict = (
+        dup_ids.join(changed_ids, id_col, "left")
+        .select(id_col, F.coalesce("changed", F.lit(False)).alias("changed"))
+        .localCheckpoint(eager=True)
+    )
+    unchanged_dups = verdict.filter(~F.col("changed")).select(id_col)
     fresh_post = d_post.join(F.broadcast(unchanged_dups), id_col, "left_anti")
     fresh_len = d_len.join(F.broadcast(unchanged_dups), id_col, "left_anti")
     if return_resent:
-        return fresh_post, fresh_len, changed_ids
+        return fresh_post, fresh_len, verdict.filter("changed").select(id_col)
     return fresh_post, fresh_len
 
 

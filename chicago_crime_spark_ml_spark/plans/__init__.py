@@ -46,12 +46,6 @@ def assert_pushed_filters(df: DataFrame, fragment: str) -> None:
     )
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans — wider is better (fewer breaks
-    out of generated code)."""
-    return explain_str(df, "simple").count("WholeStageCodegen")
-
-
 def observe_metrics(df: DataFrame, name: str, **aggs) -> tuple[DataFrame, "Observation"]:
     """Attach zero-extra-pass metrics to a plan via ``df.observe``: the
     aggregates are computed DURING the action that consumes ``df`` (no

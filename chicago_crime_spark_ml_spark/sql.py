@@ -32,9 +32,3 @@ def register_tables(
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
         out.append(name)
     return out
-
-
-def run_sql(spark: SparkSession, sf_dir: str, sql: str):
-    """One-call SQL entry point: register views, run the statement."""
-    register_tables(spark, sf_dir)
-    return spark.sql(sql)

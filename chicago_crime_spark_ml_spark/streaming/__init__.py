@@ -249,6 +249,12 @@ def _read_state_excluding_batch(
     identical output and overwrite it with itself. Missing store →
     empty frame (try_read_parquet's error-class probe).
 
+    The read takes the store's DECLARED ``schema`` (data columns plus
+    ``batch_id bigint``), so opening the store starts no footer
+    inference job; an existing empty directory reads as the empty
+    frame directly. ``tests/test_streaming_multimodal.py`` pins every
+    declared state schema against an inferred read.
+
     HEALS a crashed compaction swap first (r13 review): if a
     compaction died between its two renames, the store directory is
     absent and ``<path>__old`` holds the data — without the heal this
@@ -269,10 +275,31 @@ def _read_state_excluding_batch(
     )
 
     recover_compaction_swap(path)
-    df = try_read_parquet(spark, path)
+    df = try_read_parquet(spark, path, schema=schema)
     if df is None:
         return spark.createDataFrame([], schema)
     return df.filter(F.col("batch_id") != F.lit(batch_id)).select(*cols)
+
+
+# Declared data schemas of the sinks' ``batch_id=N`` state stores, as
+# DDL templates over the caller's id/text column names. One table, so
+# the sinks and the schema-vs-inference test read the same source.
+_STATE_SCHEMAS = {
+    "lexical_postings": "{id} long, term string, tf long",
+    "lexical_doclen": "{id} long, dl long",
+    "lsh_index": "{id} long, band int, bucket bigint",
+    "dhash_index": "{id} long, band int, byte int",
+    "frame_index": "{id} long, dhash string",
+    "docs": "{id} long, {text} string",
+}
+
+
+def _state_schema(
+    kind: str, id_col: str, text_col: str = "text"
+) -> tuple[list[str], str]:
+    """(data columns, DDL) of a :data:`_STATE_SCHEMAS` store kind."""
+    ddl = _STATE_SCHEMAS[kind].format(id=id_col, text=text_col)
+    return [f.split()[0] for f in ddl.split(", ")], ddl
 
 
 # The multi-version manifest lives INSIDE the store directory under an
@@ -295,11 +322,16 @@ _MV_BROADCAST_MAX = 4_000_000
 
 
 def _write_multiversion_manifest(
-    resent_ids: DataFrame, path: str, batch_id: int, id_col: str
+    resent_ids: DataFrame, paths: Sequence[str], batch_id: int, id_col: str
 ) -> None:
     """Record the ids this batch re-emitted with CHANGED content — the
-    ids that now hold rows in more than one batch partition — into the
+    ids that now hold rows in more than one batch partition — into each
     store's tiny ``_mv/batch_id=N`` manifest (r12, VERDICT r11 #5).
+    ``paths`` lists every store that received the same changed set
+    (the lexical sink's postings AND doclen); the set is checked for
+    emptiness ONCE for all of them, and ``resent_ids`` must not read
+    the stores (the sinks pass materialized sets), since this runs
+    after their writes.
     The set comes from the delta operator's own changed-content
     detection (joins it already runs), so maintaining the manifest
     adds no store scan; a replayed batch recomputes the identical set
@@ -340,10 +372,11 @@ def _write_multiversion_manifest(
     rows = resent_ids.select(id_col).distinct().coalesce(1)
     if rows.isEmpty():
         return
-    recover_compaction_swap(_mv_path(path))
-    rows.write.mode("overwrite").parquet(
-        f"{_mv_path(path)}/batch_id={batch_id}"
-    )
+    for path in paths:
+        recover_compaction_swap(_mv_path(path))
+        rows.write.mode("overwrite").parquet(
+            f"{_mv_path(path)}/batch_id={batch_id}"
+        )
 
 
 def _read_state_latest_by(
@@ -571,12 +604,8 @@ def streaming_near_dup_ingest(
         # cannibalize, and a changed-content re-sent id resolves to
         # its newest band rows (latest-wins, r11).
         index = _read_state_latest_by(
-            spark,
-            index_path,
-            batch_id,
-            id_col,
-            [id_col, "band", "bucket"],
-            f"{id_col} long, band int, bucket bigint",
+            spark, index_path, batch_id, id_col,
+            *_state_schema("lsh_index", id_col),
         )
         delta_rows, pairs, resent = lsh_index_delta(
             index,
@@ -589,15 +618,15 @@ def streaming_near_dup_ingest(
             band_width=band_width,
             return_resent=True,
         )
+        # resent is already materialized by the delta operator
         delta_rows = delta_rows.localCheckpoint(eager=True)
-        resent = resent.localCheckpoint(eager=True)
         pairs.write.mode("overwrite").parquet(
             f"{pairs_path}/batch_id={batch_id}"
         )
         delta_rows.write.mode("overwrite").parquet(
             f"{index_path}/batch_id={batch_id}"
         )
-        _write_multiversion_manifest(resent, index_path, batch_id, id_col)
+        _write_multiversion_manifest(resent, [index_path], batch_id, id_col)
 
     return (
         docs.writeStream.outputMode("append")
@@ -674,14 +703,12 @@ def streaming_media_near_dup_ingest(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        if modality == "video":
-            idx_schema = f"{id_col} long, dhash string"
-            idx_cols = [id_col, "dhash"]
-        else:
-            idx_schema = f"{id_col} long, band int, byte int"
-            idx_cols = [id_col, "band", "byte"]
         index = _read_state_latest_by(
-            spark, index_path, batch_id, id_col, idx_cols, idx_schema
+            spark, index_path, batch_id, id_col,
+            *_state_schema(
+                "frame_index" if modality == "video" else "dhash_index",
+                id_col,
+            ),
         )
         # signature once behind a barrier: the delta rows feed the
         # probe AND both union branches — lazy, the per-blob decode
@@ -707,15 +734,15 @@ def streaming_media_near_dup_ingest(
                 max_bucket=max_bucket,
                 return_resent=True,
             )
+        # resent is already materialized by the delta operator
         delta_rows = delta_rows.localCheckpoint(eager=True)
-        resent = resent.localCheckpoint(eager=True)
         pairs.write.mode("overwrite").parquet(
             f"{pairs_path}/batch_id={batch_id}"
         )
         delta_rows.write.mode("overwrite").parquet(
             f"{index_path}/batch_id={batch_id}"
         )
-        _write_multiversion_manifest(resent, index_path, batch_id, id_col)
+        _write_multiversion_manifest(resent, [index_path], batch_id, id_col)
 
     return (
         media.writeStream.outputMode("append")
@@ -849,12 +876,8 @@ def streaming_cluster_maintenance(
             eager=True
         )
         index = _read_state_latest_by(
-            spark,
-            index_path,
-            batch_id,
-            id_col,
-            [id_col, "band", "bucket"],
-            f"{id_col} long, band int, bucket bigint",
+            spark, index_path, batch_id, id_col,
+            *_state_schema("lsh_index", id_col),
         )
         delta_rows, cand, resent_idx = lsh_index_delta(
             index,
@@ -867,8 +890,8 @@ def streaming_cluster_maintenance(
             band_width=band_width,
             return_resent=True,
         )
+        # resent_idx is already materialized by the delta operator
         delta_rows = delta_rows.localCheckpoint(eager=True)
-        resent_idx = resent_idx.localCheckpoint(eager=True)
         # batch-precedence corpus with UNIQUE ids: a re-sent id's
         # stored text is shadowed (changed content rescans against the
         # new text), and duplicate (id, text) rows can never multiply
@@ -879,12 +902,8 @@ def streaming_cluster_maintenance(
         # rescores silently scored candidates against it. The current
         # batch's own partition is excluded (crash-replay guard).
         stored_docs = _read_state_latest_by(
-            spark,
-            docs_path,
-            batch_id,
-            id_col,
-            [id_col, text_col],
-            f"{id_col} long, {text_col} string",
+            spark, docs_path, batch_id, id_col,
+            *_state_schema("docs", id_col, text_col),
         )
         corpus = batch_docs.unionByName(
             stored_docs.join(
@@ -941,7 +960,7 @@ def streaming_cluster_maintenance(
             f"{index_path}/batch_id={batch_id}"
         )
         _write_multiversion_manifest(
-            resent_idx, index_path, batch_id, id_col
+            resent_idx, [index_path], batch_id, id_col
         )
         # (id, text) rows not already current in the docs store land in
         # this batch's partition: identical re-sends append nothing
@@ -974,7 +993,7 @@ def streaming_cluster_maintenance(
             f"{docs_path}/batch_id={batch_id}"
         )
         _write_multiversion_manifest(
-            resent_docs, docs_path, batch_id, id_col
+            resent_docs, [docs_path], batch_id, id_col
         )
 
     return (
@@ -1003,6 +1022,14 @@ def streaming_lexical_ingest(
     text.lexical_index_delta, so bm25_search_from_index over the two
     directories is always current with zero corpus re-tokenization.
 
+    Per micro-batch the sink starts one Spark job per fact it needs:
+    the state stores open with their declared schemas (no footer
+    inference), the batch is tokenized ONCE (doclen derives from the
+    materialized postings), the re-send verdict is materialized ONCE
+    before any store write, and the changed-id set is checked for
+    emptiness once for both manifests. Write order: both store
+    partitions, then the manifests (see _write_multiversion_manifest).
+
     Exactly-once on replays: both sinks write into a ``batch_id=N``
     subdirectory with overwrite mode (a replayed batch overwrites its
     own output — parquet append is not idempotent), and the delta
@@ -1024,21 +1051,16 @@ def streaming_lexical_ingest(
         # version per id — against a v1 ∪ v2 union a revert-to-v1
         # re-send matches stored rows and is wrongly dropped.
         post = _read_state_latest_by(
-            spark,
-            postings_path,
-            batch_id,
-            id_col,
-            [id_col, "term", "tf"],
-            f"{id_col} long, term string, tf long",
+            spark, postings_path, batch_id, id_col,
+            *_state_schema("lexical_postings", id_col),
         )
         dlen = _read_state_latest_by(
-            spark,
-            doclen_path,
-            batch_id,
-            id_col,
-            [id_col, "dl"],
-            f"{id_col} long, dl long",
+            spark, doclen_path, batch_id, id_col,
+            *_state_schema("lexical_doclen", id_col),
         )
+        # all three frames are lazy over the delta's postings and its
+        # re-send verdict, both materialized by the operator: the
+        # writes below never read the stores they are writing
         fresh_post, fresh_len, resent = lexical_index_delta(
             post,
             dlen,
@@ -1047,9 +1069,6 @@ def streaming_lexical_ingest(
             id_col=id_col,
             return_resent=True,
         )
-        fresh_post = fresh_post.localCheckpoint(eager=True)
-        fresh_len = fresh_len.localCheckpoint(eager=True)
-        resent = resent.localCheckpoint(eager=True)
         fresh_post.write.mode("overwrite").parquet(
             f"{postings_path}/batch_id={batch_id}"
         )
@@ -1059,9 +1078,8 @@ def streaming_lexical_ingest(
         # a changed re-send re-emits BOTH its postings and its doclen
         # row, so the same id set is multi-version in both stores
         _write_multiversion_manifest(
-            resent, postings_path, batch_id, id_col
+            resent, [postings_path, doclen_path], batch_id, id_col
         )
-        _write_multiversion_manifest(resent, doclen_path, batch_id, id_col)
 
     return (
         docs.writeStream.outputMode("append")

@@ -13,6 +13,7 @@ from chicago_crime_spark_ml_spark.operators.multimodal import (
 )
 from chicago_crime_spark_ml_spark.sources.io import load_table
 from chicago_crime_spark_ml_spark.streaming import (
+    _STATE_SCHEMAS,
     run_stream_to_memory,
     sessionize,
     stream_events,
@@ -1230,7 +1231,7 @@ def test_read_state_latest_by_manifest(spark, tmp_path):
         resent = spark.createDataFrame(
             [(1,)] if bid == 2 else [], "doc_id BIGINT"
         )
-        _write_multiversion_manifest(resent, path, bid, "doc_id")
+        _write_multiversion_manifest(resent, [path], bid, "doc_id")
 
     def read(bid):
         return _read_state_latest_by(
@@ -1260,7 +1261,7 @@ def test_read_state_latest_by_manifest(spark, tmp_path):
         rows[1], "doc_id BIGINT, term STRING"
     ).write.mode("overwrite").parquet(f"{empty_store}/batch_id=0")
     _write_multiversion_manifest(
-        spark.createDataFrame([], "doc_id BIGINT"), empty_store, 0, "doc_id"
+        spark.createDataFrame([], "doc_id BIGINT"), [empty_store], 0, "doc_id"
     )
     fast = _read_state_latest_by(
         spark,
@@ -1345,6 +1346,40 @@ def test_compact_ingest_index_reserved_batch_survives_replay(
     assert before <= after  # nothing lost — worst case duplicates
 
 
+def _run_lexical_stream(spark, tmp_path, batches):
+    """Feed ``batches`` (lists of (doc_id, text)) through
+    streaming_lexical_ingest, one micro-batch each. Returns the postings
+    and doclen store paths and the Spark jobs each batch started
+    (status-tracker job ids of the stream's run, as deltas)."""
+    from chicago_crime_spark_ml_spark.streaming import (
+        streaming_lexical_ingest,
+    )
+
+    schema = "doc_id BIGINT, text STRING"
+    src = tmp_path / "lex_src"
+    src.mkdir()
+    post_path = str(tmp_path / "lex_postings")
+    len_path = str(tmp_path / "lex_doclen")
+    stream = spark.readStream.schema(schema).parquet(str(src))
+    q = streaming_lexical_ingest(
+        stream, post_path, len_path, str(tmp_path / "lex_ckpt")
+    )
+    tracker = spark.sparkContext.statusTracker()
+    jobs, seen = [], set()
+    try:
+        for rows in batches:
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(str(src))
+            q.processAllAvailable()
+            ids = set(tracker.getJobIdsForGroup(str(q.runId)))
+            jobs.append(len(ids - seen))
+            seen |= ids
+    finally:
+        q.stop()
+    return post_path, len_path, jobs
+
+
 def test_streaming_lexical_ingest_search_equals_batch(spark, tmp_path):
     """Retrieval joins the streaming ingest family: after two
     micro-batches the maintained (postings, doclen) directories serve
@@ -1356,9 +1391,6 @@ def test_streaming_lexical_ingest_search_equals_batch(spark, tmp_path):
         bm25_search,
         bm25_search_from_index,
     )
-    from chicago_crime_spark_ml_spark.streaming import (
-        streaming_lexical_ingest,
-    )
 
     rows1 = [
         (1, "spark window table spark"),
@@ -1369,27 +1401,9 @@ def test_streaming_lexical_ingest_search_equals_batch(spark, tmp_path):
         (2, "table of contents and a window seat"),  # re-sent, identical
     ]
     schema = "doc_id BIGINT, text STRING"
-    src = tmp_path / "lex_src"
-    src.mkdir()
-    post_path = str(tmp_path / "lex_postings")
-    len_path = str(tmp_path / "lex_doclen")
-
-    def emit(rows):
-        spark.createDataFrame(rows, schema).coalesce(2).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    emit(rows1)
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    q = streaming_lexical_ingest(
-        stream, post_path, len_path, str(tmp_path / "lex_ckpt")
+    post_path, len_path, _ = _run_lexical_stream(
+        spark, tmp_path, [rows1, rows2]
     )
-    try:
-        q.processAllAvailable()
-        emit(rows2)
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     postings = spark.read.parquet(post_path).select("doc_id", "term", "tf")
     doclen = spark.read.parquet(len_path).select("doc_id", "dl")
@@ -1412,6 +1426,204 @@ def test_streaming_lexical_ingest_search_equals_batch(spark, tmp_path):
         ).collect()
     ]
     assert got == want and len(got) == 3
+
+
+def test_streaming_lexical_ingest_changed_resend_latest_wins(
+    spark, tmp_path
+):
+    """A CHANGED re-send through the lexical stream: batch 2 re-sends
+    doc 2 with new text, batch 3 replays batch 2's input. Each store
+    records doc 2 in its ``_mv`` manifest exactly once (the replay is
+    an identical re-send of v2 and appends nothing), the latest-wins
+    reads return only v2's postings and dl, and BM25 over them equals
+    bm25_search over the latest corpus."""
+    from chicago_crime_spark_ml_spark.operators.text import (
+        bm25_search,
+        bm25_search_from_index,
+        lexical_index,
+    )
+    from chicago_crime_spark_ml_spark.sources.io import mv_manifest_path
+    from chicago_crime_spark_ml_spark.streaming import (
+        _state_schema,
+        read_state_latest,
+    )
+
+    rows1 = [
+        (1, "spark window table spark"),
+        (2, "table of contents and a window seat"),
+    ]
+    rows2 = [
+        (2, "window window spark spark spark table"),  # changed re-send
+        (3, "spark spark spark everywhere"),
+    ]
+    post_path, len_path, _ = _run_lexical_stream(
+        spark, tmp_path, [rows1, rows2, rows2]
+    )
+
+    for store in (post_path, len_path):
+        mv = spark.read.parquet(mv_manifest_path(store))
+        assert [(r.doc_id, r.batch_id) for r in mv.collect()] == [(2, 1)]
+    # append-only: v1 stays stored, the replay appended nothing
+    raw_len = spark.read.parquet(len_path)
+    assert sorted((r.doc_id, r.batch_id) for r in raw_len.collect()) == [
+        (1, 0), (2, 0), (2, 1), (3, 1),
+    ]
+
+    def latest(store, kind):
+        return read_state_latest(
+            spark, store, "doc_id", *_state_schema(kind, "doc_id")
+        )
+
+    postings = latest(post_path, "lexical_postings")
+    doclen = latest(len_path, "lexical_doclen")
+    corpus = spark.createDataFrame(
+        [rows1[0], *rows2], "doc_id BIGINT, text STRING"
+    )
+    want_post, want_len = lexical_index(corpus)
+    assert sorted(postings.collect()) == sorted(want_post.collect())
+    assert sorted(doclen.collect()) == sorted(want_len.collect())
+    terms = ["spark", "table", "window"]
+    want = [(r.doc_id, r.bm25) for r in bm25_search(corpus, terms).collect()]
+    got = [
+        (r.doc_id, r.bm25)
+        for r in bm25_search_from_index(postings, doclen, terms).collect()
+    ]
+    assert got == want and len(got) == 3
+
+
+def test_streaming_lexical_ingest_job_budget(spark, tmp_path):
+    """Spark jobs each lexical micro-batch starts after the first, the
+    way test_plans budgets Exchanges: the state stores open with their
+    declared schemas (no inference job), the batch is tokenized once,
+    the re-send verdict is materialized once and the changed-id set is
+    checked once for both manifests. The counts repeat exactly from
+    run to run; a job added to the per-batch path shows here."""
+    batches = [
+        [(b * 10 + i, f"spark table window doc {b} {i}") for i in range(5)]
+        for b in range(3)
+    ]
+    batches[2][0] = (10, "spark table window doc 1 0")  # identical re-send
+    _, _, jobs = _run_lexical_stream(spark, tmp_path, batches)
+    # batch 1: new docs only; batch 2: a re-send runs the dup joins
+    budget = [11, 18]
+    assert all(n <= b for n, b in zip(jobs[1:], budget)), (jobs, budget)
+
+
+@pytest.mark.parametrize("kind", sorted(_STATE_SCHEMAS))
+def test_declared_state_schemas_match_inferred_reads(spark, tmp_path, kind):
+    """Each state store the sinks open with a DECLARED schema (no footer
+    inference) must read the same rows with the same column types as
+    an inferred read of the same files — over per-batch partitions, a
+    store compacted to ``batch_id=-1``, an existing empty directory
+    and a missing path. The stores hold the delta operators' own
+    output, the rows the sinks write."""
+    import os
+    import shutil
+
+    import numpy as np
+
+    from chicago_crime_spark_ml_spark.operators.dedup import lsh_index_delta
+    from chicago_crime_spark_ml_spark.operators.multimodal import (
+        dhash_index_delta,
+        encode_netpbm,
+        frame_index_delta,
+        frame_stream_dhash,
+        image_dhash,
+    )
+    from chicago_crime_spark_ml_spark.operators.text import (
+        lexical_index_delta,
+    )
+    from chicago_crime_spark_ml_spark.sources.io import (
+        compact_ingest_index,
+        try_read_parquet,
+    )
+    from chicago_crime_spark_ml_spark.streaming import (
+        _read_state_excluding_batch,
+        _state_schema,
+    )
+
+    cols, ddl = _state_schema(kind, "doc_id")
+    empty = spark.createDataFrame([], ddl)
+    rng = np.random.default_rng(7)
+
+    def blob(*frames):
+        return bytearray(b"".join(encode_netpbm(f) for f in frames))
+
+    def rows_of_batch(b):
+        ids = [b * 10 + i for i in range(3)]
+        if kind in ("dhash_index", "frame_index"):
+            n_frames = 2 if kind == "frame_index" else 1
+            blobs = spark.createDataFrame(
+                [
+                    (i, blob(*rng.integers(0, 256, (n_frames, 16, 18))))
+                    for i in ids
+                ],
+                "doc_id BIGINT, blob BINARY",
+            )
+            if kind == "dhash_index":
+                return dhash_index_delta(empty, image_dhash(blobs))[0]
+            return frame_index_delta(empty, frame_stream_dhash(blobs))[0]
+        docs = spark.createDataFrame(
+            [(i, f"spark table window doc {i} of batch {b}") for i in ids],
+            "doc_id BIGINT, text STRING",
+        )
+        if kind == "docs":
+            return docs.select("doc_id", "text")
+        if kind == "lsh_index":
+            return lsh_index_delta(empty, docs)[0]
+        post, dlen = lexical_index_delta(
+            *(
+                spark.createDataFrame([], _state_schema(k, "doc_id")[1])
+                for k in ("lexical_postings", "lexical_doclen")
+            ),
+            docs,
+        )
+        return post if kind == "lexical_postings" else dlen
+
+    def read_both(path, batch_id):
+        declared = _read_state_excluding_batch(
+            spark, path, batch_id, [*cols, "batch_id"],
+            ddl + ", batch_id bigint",
+        )
+        inferred = try_read_parquet(spark, path)
+        if inferred is None:
+            inferred = spark.createDataFrame([], ddl + ", batch_id bigint")
+        inferred = inferred.filter(F.col("batch_id") != batch_id).select(
+            *cols, "batch_id"
+        )
+        return declared, inferred
+
+    def same(declared, inferred):
+        # data columns keep their types; batch_id is declared bigint
+        # where inference picks int, so compare its values
+        assert declared.select(*cols).dtypes == inferred.select(*cols).dtypes
+        assert sorted(map(tuple, declared.collect())) == sorted(
+            map(tuple, inferred.collect())
+        )
+
+    store = str(tmp_path / kind)
+    for b in range(3):
+        rows_of_batch(b).write.mode("overwrite").parquet(
+            f"{store}/batch_id={b}"
+        )
+    declared, inferred = read_both(store, 2)
+    assert declared.count() > 0
+    same(declared, inferred)
+
+    compacted = str(tmp_path / f"{kind}_compacted")
+    shutil.copytree(store, compacted)
+    compact_ingest_index(spark, compacted)
+    assert [
+        d for d in os.listdir(compacted) if d.startswith("batch_id=")
+    ] == ["batch_id=-1"]
+    same(*read_both(compacted, 3))
+
+    empty_dir = tmp_path / f"{kind}_empty"
+    empty_dir.mkdir()
+    for path in (str(empty_dir), str(tmp_path / f"{kind}_missing")):
+        declared, inferred = read_both(path, 0)
+        assert declared.count() == 0
+        same(declared, inferred)
 
 
 def test_streaming_cluster_maintenance_equals_batch(spark, tmp_path):
@@ -1703,7 +1915,7 @@ def test_compact_mv_manifest_folds_listing_and_preserves_reads(
             resent.append((2,))
         _write_multiversion_manifest(
             spark.createDataFrame(resent, "doc_id BIGINT"),
-            path,
+            [path],
             bid,
             "doc_id",
         )
@@ -1734,7 +1946,7 @@ def test_compact_mv_manifest_folds_listing_and_preserves_reads(
         [(1, "v5")], "doc_id BIGINT, term STRING"
     ).write.mode("overwrite").parquet(f"{path}/batch_id=5")
     _write_multiversion_manifest(
-        spark.createDataFrame([(1,)], "doc_id BIGINT"), path, 5, "doc_id"
+        spark.createDataFrame([(1,)], "doc_id BIGINT"), [path], 5, "doc_id"
     )
     assert {(r.doc_id, r.term) for r in read(99).collect()} == {
         (1, "v5"),
@@ -1776,7 +1988,7 @@ def test_crashed_swaps_heal_on_read_and_write_paths(spark, tmp_path):
             [(1, term)], "doc_id BIGINT, term STRING"
         ).write.mode("overwrite").parquet(f"{path}/batch_id={bid}")
     _write_multiversion_manifest(
-        spark.createDataFrame([(1,)], "doc_id BIGINT"), path, 1, "doc_id"
+        spark.createDataFrame([(1,)], "doc_id BIGINT"), [path], 1, "doc_id"
     )
 
     def read(bid=99):
@@ -1802,7 +2014,7 @@ def test_crashed_swaps_heal_on_read_and_write_paths(spark, tmp_path):
         [(1, "v2")], "doc_id BIGINT, term STRING"
     ).write.mode("overwrite").parquet(f"{path}/batch_id=2")
     _write_multiversion_manifest(
-        spark.createDataFrame([(1,)], "doc_id BIGINT"), path, 2, "doc_id"
+        spark.createDataFrame([(1,)], "doc_id BIGINT"), [path], 2, "doc_id"
     )
     assert not os.path.exists(mv_dir + "__old")
     assert read() == {(1, "v2")}
